@@ -185,14 +185,7 @@ object ScaleRamp {
     // optional 4th arg: comma-separated subset of rampQueries to run
     val subset = if (args.length > 3)
       Some(args(3).split(',').map(_.trim).filter(_.nonEmpty).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = GateSession.build(GateSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
 
     if (!new java.io.File(s"$rampDir/documents.parquet").exists()) {

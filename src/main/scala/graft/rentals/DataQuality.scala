@@ -19,13 +19,15 @@ case object Fail extends Severity { val label = "fail" }
   *
   * `fusedAggs`/`fusedEval` are the check's optional SINGLE-PASS form: the
   * named aggregate inputs it needs (aliases shared across checks are
-  * computed once) and a predicate over their values. When every check in a
-  * gate carries one, [[DataQuality.summarize]] runs the whole gate as ONE
-  * aggregation job instead of one-to-two count jobs per check — the same
-  * fusion [[DataQuality.summarizeFused]] hand-writes for the standard set,
-  * available to any builder-made combination. `checkFn` remains the
-  * semantic ground truth (and the fallback when a custom check joins the
-  * list); DataQualitySpec asserts the two forms agree.
+  * computed once, so an alias must name ONE expression — it encodes every
+  * parameter the expression depends on) and a predicate over their
+  * values. When every check in a gate carries one, [[DataQuality.summarize]]
+  * runs the whole gate as ONE aggregation job instead of one-to-two count
+  * jobs per check — the same fusion [[DataQuality.summarizeFused]]
+  * hand-writes for the standard set, available to any builder-made
+  * combination. `checkFn` remains the semantic ground truth (and the
+  * fallback when a custom check joins the list); DataQualitySpec asserts
+  * the two forms agree.
   */
 final case class DataQualityCheck(
     name: String,
@@ -99,10 +101,16 @@ object DataQuality {
       severity = Fail,
       description = s"All `$column` values must lie in [$min, $max]",
       // count(when(cond, 1)) skips null comparisons exactly like the
-      // filter form: a null predicate row is neither < min nor > max
+      // filter form: a null predicate row is neither < min nor > max. The
+      // bounds are part of the alias: two range checks on one column with
+      // different bounds are different aggregates
       fusedAggs = Seq(
-        s"dq_oob_$column" -> count(when(col(column) < min || col(column) > max, 1))),
-      fusedEval = Some(m => m(s"dq_oob_$column") == 0L))
+        oobAlias(column, min, max) ->
+          count(when(col(column) < min || col(column) > max, 1))),
+      fusedEval = Some(m => m(oobAlias(column, min, max)) == 0L))
+
+  private def oobAlias(column: String, min: Double, max: Double): String =
+    s"dq_oob_${column}_${min}_$max"
 
   /** Key-uniqueness gate (`uniqueness_check`, `jobs/data_quality.py:123-158`):
     * passes when `total == distinct(keys)` — *exact* distinct, the DQ contract
@@ -120,10 +128,14 @@ object DataQuality {
       description = s"(${columns.mkString(", ")}) must be unique",
       fusedAggs = Seq(
         "dq_total" -> count(lit(1)),
-        s"dq_distinct_${columns.mkString("_")}" ->
-          count_distinct(struct(columns.map(col): _*))),
-      fusedEval = Some(m =>
-        m("dq_total") == m(s"dq_distinct_${columns.mkString("_")}")))
+        distinctAlias(columns) -> count_distinct(struct(columns.map(col): _*))),
+      fusedEval = Some(m => m("dq_total") == m(distinctAlias(columns))))
+
+  /** Length-prefixed key list: `Seq("a_b")` and `Seq("a", "b")` must not
+    * share an alias (a plain `_` join maps both to `a_b`).
+    */
+  private def distinctAlias(columns: Seq[String]): String =
+    "dq_distinct_" + columns.map(c => s"${c.length}:$c").mkString(",")
 
   /** The reference pipeline's standard gate set, built from config thresholds
     * (`dags/rental_pipeline_dag.py:137-142` + `config/pipeline.yaml:18-22`).
@@ -208,9 +220,14 @@ object DataQuality {
     // no input caching needed. Any error (e.g. a typo'd column name) falls
     // back to the per-check path, which records the offender as failed and
     // still runs the others, preserving the run-all-then-throw contract.
-    if (checks.nonEmpty && checks.forall(_.fusedEval.isDefined)) {
+    // So does an alias two checks bind to DIFFERENT expressions: sharing
+    // it would feed one check the other's value.
+    val named = checks.flatMap(_.fusedAggs)
+    val aliasesConsistent = named.groupBy(_._1).values
+      .forall(_.map(_._2.toString).distinct.size == 1)
+    if (checks.nonEmpty && checks.forall(_.fusedEval.isDefined) && aliasesConsistent) {
       try {
-        val aggs = checks.flatMap(_.fusedAggs).distinctBy(_._1)
+        val aggs = named.distinctBy(_._1)
         val row = df.agg(
           aggs.head._2.as(aggs.head._1),
           aggs.tail.map { case (n, c) => c.as(n) }: _*).head()

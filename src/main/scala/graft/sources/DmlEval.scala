@@ -264,16 +264,15 @@ object DistributedDml {
     * set to every executor; a backfill epoch with 10⁸ keys cannot ride
     * that. Same contract as [[probeMatches]]: doomed positions per
     * batch, already-dead DV positions excluded, NULL-keyed rows never
-    * match. `extraKeys` carries the epoch's driver-resident (row-payload)
-    * key tuples; `epochPaths` its executor-written files, keyed by
-    * `keyIdx`/`keyTypes` into `epochSchema`.
+    * match. `extraKeys` carries the epoch's driver-materialized
+    * (row-payload) key tuples; `epochPaths` its executor-written files,
+    * keyed by `keyIdx`/`keyTypes` into `epochSchema`.
     */
   def probeMatchesShuffled(sc: SparkContext, tasks: Seq[ProbeTask],
       epochPaths: Seq[String], epochSchema: StructType,
       keyIdx: Array[Int], keyTypes: Array[DataType],
-      extraKeys: Seq[Seq[Any]],
-      extraRows: Seq[(Seq[Any], (Long, Int))] = Nil): Map[Long, Array[Int]] =
-    if (tasks.isEmpty && extraRows.isEmpty) Map.empty
+      extraKeys: Seq[Seq[Any]]): Map[Long, Array[Int]] =
+    if (tasks.isEmpty) Map.empty
     else {
       shuffledProbeRuns.incrementAndGet()
       val fileKeys = sc.parallelize(epochPaths, math.max(1, epochPaths.size))
@@ -292,7 +291,7 @@ object DistributedDml {
          else fileKeys ++ sc.parallelize(extraKeys, 1))
           .distinct() // an epoch upserts the same key many times — dedupe
           .map(k => k -> (()))                                  // join form
-      val fileRows = sc.parallelize(tasks, math.max(1, tasks.size)).flatMap { t =>
+      val rows = sc.parallelize(tasks, math.max(1, tasks.size)).flatMap { t =>
         val dead = PosBitmap.membership(t.dvDead)
         val it = ParquetRows.iterator(t.path, t.matchSchema)
         var pos = -1
@@ -308,12 +307,6 @@ object DistributedDml {
           }
         }
       }
-      // driver-resident candidate batches (pre-migration history on a
-      // file-backed table) ride the same join as parallelized pairs —
-      // their rows already live driver-side, so this adds no new ceiling
-      val rows =
-        if (extraRows.isEmpty) fileRows
-        else fileRows ++ sc.parallelize(extraRows, 1)
       rows.join(keys)
         .map { case (_, ((id, pos), _)) => id -> pos }
         .aggregateByKey(new org.roaringbitmap.RoaringBitmap())(

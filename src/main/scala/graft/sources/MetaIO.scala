@@ -61,8 +61,6 @@ private[sources] object MetaIO {
 
   private[sources] def useLocalCatalog(): Unit = restClient = None
 
-  private[sources] def restCatalogUri: Option[String] = restClient.map(_.baseUri)
-
   /** Table keys the configured catalog service lists — empty in local
     * (direct-file) mode; discovery then rides the warehouse scan.
     */

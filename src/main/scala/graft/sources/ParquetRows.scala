@@ -264,7 +264,7 @@ object ParquetRows {
   val readCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Materialize a whole file (driver-side content paths: equality-delete
-    * probes, DELETE row evaluation, the driver-resident compaction fold —
+    * probes, sessionless DELETE row evaluation, rollback subsets —
     * gate-scale by contract, documented at each call site).
     */
   def read(path: String, schema: StructType): Array[InternalRow] = {

@@ -2011,9 +2011,7 @@ object Roundtrips {
     * drop/expiry reclaim); this row pins the DATA: the oracle restates
     * delete + slice + total from `orders`, so a row lost to the
     * file/manifest hand-off anywhere in write→DV→rewrite→scan breaks the
-    * hash. This is the storage plane a 100 TB deployment actually runs —
-    * the driver-resident mode is the gate-scale default, this mode is the
-    * scale path.
+    * hash.
     */
   val dsv2ParquetStorage: QueryDef = QueryDef(
     "dsv2_parquet_storage",
@@ -2179,8 +2177,8 @@ object Roundtrips {
       val routed = server.commitCount.get >= 3
       val client = new CatalogClient(server.uri)
       val listed = client.listTables().contains("mem_cust_rest")
-      val served = MemTables.get("mem_cust_rest").get.storageDir
-        .exists(d => client.readCurrent(d, TableMetadata.FileName).nonEmpty)
+      val served = client.readCurrent(
+        MemTables.get("mem_cust_rest").get.storageDir, TableMetadata.FileName).nonEmpty
       val out = spark.sql(
         s"""SELECT 'nation' AS part, nk, count(*) AS n, sum(cents) AS sv
            |FROM $tbl GROUP BY nk
@@ -2269,19 +2267,15 @@ object Roundtrips {
   }
 
   /** STORAGE MIGRATION through the gate (`CALL graft.migrate_storage`,
-    * [[MemTables.migrateStorage]]): a deliberately DRIVER-RESIDENT table
-    * (explicit `'graft.storage'=''`... the property must be absent, so
-    * the create names no storage and the session default is overridden
-    * by building it under a scoped conf) accumulates real history —
-    * append, MoR DELETE, overwrite — then promotes onto the file-backed
-    * plane in place: every batch (history included) becomes a parquet
-    * file + manifest, no version is minted, and the table ACQUIRES
-    * durability (the measured read runs after an unload, off recovered
-    * metadata). The oracle restates the final state and the pre-migration
-    * snapshot relationally — a row lost or a DV misplaced in the
-    * conversion breaks the hash. This is the operational on-ramp a
-    * deployment uses to move yesterday's driver-resident tables onto the
-    * scale plane without recreating them.
+    * [[MemTables.migrateStorage]]): a table accumulates real history —
+    * append, MoR DELETE — then migrates to `'parquet'`, which on an
+    * already file-backed table is an idempotent no-op (no version minted,
+    * no file written). A further append follows, and the measured read
+    * runs after an unload, off recovered metadata, both current and
+    * `VERSION AS OF 1` — the unload/recover and time-travel drill. The
+    * oracle restates the final state and the pre-delete snapshot
+    * relationally — a row lost or a DV misplaced anywhere breaks the
+    * hash.
     */
   val dsv2MigrateStorage: QueryDef = QueryDef(
     "dsv2_migrate_storage",
@@ -2300,20 +2294,14 @@ object Roundtrips {
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.SeqCatalog")
     val tbl = "graft.mem_orders_migrate"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    // start DRIVER-RESIDENT on purpose (the migration's whole premise),
-    // overriding the session's parquet default for this one create
-    val prior = spark.conf.getOption(SeqCatalog.DefaultStorageConf)
-    spark.conf.unset(SeqCatalog.DefaultStorageConf)
-    try {
-      spark.sql(s"CREATE TABLE $tbl (k BIGINT, v BIGINT) " +
-        "TBLPROPERTIES ('graft.delete-mode'='merge-on-read')") // v0
-    } finally prior.foreach(spark.conf.set(SeqCatalog.DefaultStorageConf, _))
+    spark.sql(s"CREATE TABLE $tbl (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('graft.delete-mode'='merge-on-read')") // v0
     val base = Tables.orders(spark, dir).select(
       col("o_orderkey").as("k"), Num.cents(col("o_totalprice")).as("v"))
-    base.writeTo(tbl).append() // v1: driver-resident batches
+    base.writeTo(tbl).append() // v1
     spark.sql(s"DELETE FROM $tbl WHERE v < 14000000") // v2: DVs
-    spark.sql(s"CALL graft.migrate_storage('mem_orders_migrate', 'parquet')")
-    base.filter(col("k") % 3 === 0).writeTo(tbl).append() // v3: lands as files
+    spark.sql(s"CALL graft.migrate_storage('mem_orders_migrate', 'parquet')") // no-op
+    base.filter(col("k") % 3 === 0).writeTo(tbl).append() // v3
     // durability drill: the measured read plans off recovered metadata
     spark.sql(s"CALL graft.unload_table('mem_orders_migrate')")
     spark.sql(

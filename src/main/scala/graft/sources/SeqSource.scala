@@ -321,11 +321,10 @@ final case class SeqScan(
   *    (creation rejected) so the generated tables cannot be shadowed.
   */
 object SeqCatalog {
-  /** Session conf naming the storage plane a propertyless CREATE TABLE
-    * inherits: `'parquet'` = file-backed (executor-written files +
-    * durable metadata), anything else/unset = driver-resident. The
-    * driver-contract mains (Verify/Bench/Smoke) set it to `parquet`, so
-    * every gate table runs the scale plane by default.
+  /** Former session conf naming the storage plane a propertyless CREATE
+    * TABLE inherited. Every table is file-backed now, so the key is
+    * accepted and has no effect; the name stays for callers that still
+    * set it.
     */
   val DefaultStorageConf = "spark.graft.defaultTableStorage"
 }
@@ -744,24 +743,10 @@ class SeqCatalog extends org.apache.spark.sql.connector.catalog.TableCatalog
     val mode = Option(properties.get("graft.delete-mode"))
       .getOrElse(MemTables.DeleteModeCow)
     // keep the FULL user property map so SHOW TBLPROPERTIES echoes what
-    // CREATE accepted (silently dropping a property would misreport)
+    // CREATE accepted (silently dropping a property would misreport);
+    // [[MemTables.create]] stamps the storage format into it
     import scala.jdk.CollectionConverters._
-    // SESSION-DEFAULT storage plane (the Iceberg `write.format.default`
-    // shape): a CREATE that does not choose a storage mode inherits
-    // `spark.graft.defaultTableStorage` — how a deployment makes the
-    // file-backed plane (executor-written parquet + durable metadata)
-    // the norm without touching every DDL statement. An explicit
-    // `'graft.storage'` on the statement always wins.
-    val propsMap = {
-      val m = properties.asScala.toMap
-      if (m.contains(MemTables.StorageProp)) m
-      else org.apache.spark.sql.internal.SQLConf.get
-        .getConfString(SeqCatalog.DefaultStorageConf, "") match {
-        case "parquet" => m + (MemTables.StorageProp -> "parquet")
-        case _ => m
-      }
-    }
-    (mode, propsMap, spec)
+    (mode, properties.asScala.toMap, spec)
   }
 
   /** ATOMIC CTAS/RTAS ([[org.apache.spark.sql.connector.catalog
@@ -1256,18 +1241,13 @@ object CompactTableProcedure
     val key = input.getUTF8String(0).toString
     val st = MemTables.get(key).getOrElse(
       throw new IllegalArgumentException(s"mem table $key does not exist"))
-    // file-backed tables compact as a DISTRIBUTED rewrite job (executor
-    // read -> streaming write -> manifest publish — the same shape as
+    // compaction is a DISTRIBUTED rewrite job (executor read ->
+    // streaming write -> manifest publish — the same shape as
     // rewrite_data_files with the scan layout kept): the driver-side fold
     // would pull every live file through the driver, the round-12
-    // verdict's flagged ceiling. Driver-resident tables keep the fold —
-    // their rows live on the driver by that mode's own contract.
-    val (nBatches, nRows, version) = st.storageDir match {
-      case Some(_) =>
-        MemTables.compactNoop(st).getOrElse(RewriteJobs.run(
-          org.apache.spark.sql.SparkSession.active, key, ""))
-      case None => MemTables.compact(key)
-    }
+    // verdict's flagged ceiling
+    val (nBatches, nRows, version) = MemTables.compactNoop(st).getOrElse(
+      RewriteJobs.run(org.apache.spark.sql.SparkSession.active, key, ""))
     ProcedureResults.scan(s"GraftCompactTable $key", outSchema,
       Seq(Seq(nBatches, nRows, version)))
   }
@@ -1579,20 +1559,17 @@ object UnloadTableProcedure
     val key = input.getUTF8String(0).toString
     val dir = MemTables.get(key)
       .getOrElse(throw new IllegalArgumentException(s"mem table $key does not exist"))
-      .storageDir.getOrElse("")
+      .storageDir
     MemTables.unload(key)
     ProcedureResults.scan(s"GraftUnloadTable $key", outSchema,
       Seq(Seq(key, dir)))
   }
 }
 
-/** `CALL graft.migrate_storage('t', 'parquet')` — promote a
-  * driver-resident table onto the file-backed plane in place
-  * ([[MemTables.migrateStorage]]): batches become parquet files +
-  * manifests, the durable metadata plane starts persisting, and all
-  * future writes land executor-side. Logical contents are bit-identical
-  * (no version minted, CDC-invisible). The operational path off the
-  * gate-scale default mode without recreating the table.
+/** `CALL graft.migrate_storage('t', 'parquet')` — storage migration
+  * ([[MemTables.migrateStorage]]). Every table is already file-backed, so
+  * the call validates its target and returns `(0, storage_dir)`: an
+  * idempotent no-op (no version minted, CDC-invisible).
   */
 object MigrateStorageProcedure
     extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
@@ -1603,8 +1580,8 @@ object MigrateStorageProcedure
 
   override def name(): String = "migrate_storage"
   override def description(): String =
-    "rewrite a driver-resident table's batches as parquet files + " +
-      "manifests; logical contents unchanged"
+    "migrate a table to the parquet storage format (a no-op: every " +
+      "table is file-backed)"
   override def bind(inputType: StructType): BoundProcedure = this
   override def isDeterministic: Boolean = false
   override def parameters(): Array[ProcedureParameter] = Array(
@@ -2050,7 +2027,7 @@ private[sources] object RewriteJobs {
     val maxDeadRatio = st.createProps.get(MemTables.AutoCompactDeadRatioProp)
       .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
       .filter(r => r > 0.0 && r <= 1.0)
-    if ((threshold <= 0 && maxDeadRatio.isEmpty) || st.storageDir.isEmpty) return
+    if (threshold <= 0 && maxDeadRatio.isEmpty) return
     val (live, deadRows, storedRows) = st.synchronized {
       val lv = st.batches.filter(_.removedAt == Long.MaxValue)
       (lv.size, lv.iterator.map(_.dv.size.toLong).sum,
@@ -2219,39 +2196,27 @@ private[sources] object RewriteJobs {
         df = df.coalesce(outputN)
       }
     }
-    // the write-task protocol, inline. Two storage planes:
-    //  - file-backed (`graft.storage=parquet`): each task SPLITS, WRITES
-    //    its parquet files, and computes stats IN THE EXECUTOR; the driver
-    //    collects only MANIFESTS — publish cost tracks the manifest count,
-    //    never the data (the 100 TB rewrite shape);
-    //  - driver-resident (default): each task buffers its partition and
-    //    ships the rows; the driver publishes only committed buffers,
-    //    atomically (gate-scale by the mode's own contract).
-    val payloads: Seq[MemTables.TaskPayload] = st.storageDir match {
-      case Some(dir) =>
-        val pw = MemParquetWrite(dir, schema, st.partitioning, st.currentSpecId,
-          st.bloomCols)
-        df.queryExecution.toRdd
-          .mapPartitionsWithIndex { (pid, it) =>
-            // STREAMING write: rows flow straight into per-tuple open
-            // writers ([[TaskFileWriter]]) — the task never buffers its
-            // partition, so the rewrite's memory ceiling is writer state
-            // regardless of partition size (the 100 TB shape)
-            val files = new TaskFileWriter(pw, s"rewrite-$pid")
-            try {
-              it.foreach(files.write)
-              if (files.isEmpty) Iterator.empty
-              else Iterator(
-                MemTables.FilesPayload(files.finish()): MemTables.TaskPayload)
-            } catch { case e: Throwable => files.abort(); throw e }
-          }
-          .collect().toSeq
-      case None =>
-        df.queryExecution.toRdd
-          .mapPartitions(it => Iterator(
-            MemTables.RowsPayload(it.map(_.copy()).toArray): MemTables.TaskPayload))
-          .collect().toSeq
-    }
+    // the write-task protocol, inline: each task SPLITS, WRITES its
+    // parquet files, and computes stats IN THE EXECUTOR; the driver
+    // collects only MANIFESTS — publish cost tracks the manifest count,
+    // never the data (the 100 TB rewrite shape)
+    val pw = MemParquetWrite(st.storageDir, schema, st.partitioning,
+      st.currentSpecId, st.bloomCols)
+    val payloads: Seq[MemTables.TaskPayload] = df.queryExecution.toRdd
+      .mapPartitionsWithIndex { (pid, it) =>
+        // STREAMING write: rows flow straight into per-tuple open
+        // writers ([[TaskFileWriter]]) — the task never buffers its
+        // partition, so the rewrite's memory ceiling is writer state
+        // regardless of partition size (the 100 TB shape)
+        val files = new TaskFileWriter(pw, s"rewrite-$pid")
+        try {
+          it.foreach(files.write)
+          if (files.isEmpty) Iterator.empty
+          else Iterator(
+            MemTables.FilesPayload(files.finish()): MemTables.TaskPayload)
+        } catch { case e: Throwable => files.abort(); throw e }
+      }
+      .collect().toSeq
     MemTables.publishCompaction(key, expected, schema, payloads, sortCols.toSeq)
   }
 }

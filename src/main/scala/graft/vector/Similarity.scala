@@ -25,8 +25,6 @@ object Similarity {
 
   /** Quantized embedding + exact integer squared norm. */
   private val qvec = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT))"
-  private def dotSpark(a: String, b: String) =
-    s"aggregate(zip_with($a, $b, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
 
   private val qvecSql =
     "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT))"

@@ -14,6 +14,22 @@ trait SparkSpec extends AnyFunSuite {
   def mkDf(schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
 
+  /** Run `f` with no active and no default session — the only way left
+    * to reach the sessionless paths (e.g. the read-time equality-delete
+    * record of a direct upsert-epoch commit). Both are restored after.
+    */
+  def withoutSession[A](f: => A): A = {
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try f
+    finally {
+      default.foreach(SparkSession.setDefaultSession)
+      active.foreach(SparkSession.setActiveSession)
+    }
+  }
+
   def withTempDir[A](f: java.io.File => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft-test").toFile
     try f(dir)

@@ -101,6 +101,32 @@ class DataQualitySpec extends SparkSpec {
     }
   }
 
+  test("fused gate: two range checks on one column with different bounds keep separate aggregates") {
+    val df = rent(Seq(D(100.0), D(900.0)))
+    val checks = Seq(
+      DataQuality.rangeCheck("rent", 0.0, 1000.0), // passes
+      DataQuality.rangeCheck("rent", 0.0, 500.0)) // 900 is out of range
+    val summary = DataQuality.summarize(df, checks)
+    assert(summary.details.map(_.passed) === Seq(true, false))
+    assert(summary.details.map(_.passed) === checks.map(_.checkFn(df)))
+  }
+
+  test("fused gate: uniqueness on Seq(\"a_b\") and Seq(\"a\", \"b\") keep separate aggregates") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("a_b", StringType), StructField("a", StringType),
+      StructField("b", StringType)))
+    // a_b unique; (a, b) repeats
+    val df = mkDf(schema, Seq(Row("x", "k", "v"), Row("y", "k", "v")))
+    val checks = Seq(
+      DataQuality.uniquenessCheck(Seq("a_b")),
+      DataQuality.uniquenessCheck(Seq("a", "b")))
+    val summary = DataQuality.summarize(df, checks)
+    assert(summary.details.map(_.passed) === Seq(true, false))
+    assert(summary.warnings === 1)
+    assert(summary.details.map(_.passed) === checks.map(_.checkFn(df)))
+  }
+
   test("standard gate passes on the healthy pipeline output") {
     val healthy = mkDf(Fixtures.longSchema, Fixtures.longRows)
       .transform(Transforms.cleanNulls)

@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
   * ([[ParquetColumnar]]): plain scans report and serve `ColumnarBatch`es
   * through Spark's vectorized parquet readers; DV kills, head cuts, and
   * the row-id metadata columns stay exact via the parquet row index; and
-  * every shape the columnar projection cannot express (type widening,
-  * driver-resident batches) falls back to the row path — uniformly per
+  * every shape the columnar projection cannot express (type widening)
+  * falls back to the row path — uniformly per
   * scan, with identical results.
   */
 class ColumnarReadSpec extends SparkSpec {

@@ -32,7 +32,7 @@ class CommitCasSpec extends SparkSpec {
     spark.sql("CREATE TABLE graft.cas_t (k BIGINT) " +
       "TBLPROPERTIES ('graft.storage'='parquet')")
     spark.sql("INSERT INTO graft.cas_t VALUES (1)")
-    val dir = MemTables.get("cas_t").get.storageDir.get
+    val dir = MemTables.get("cas_t").get.storageDir
     // DRIVER B: an INDEPENDENT catalog instance over the same warehouse —
     // its state loads straight from the durable plane (never the
     // registry) and commits a tag through it. The CAS at its loaded
@@ -57,7 +57,7 @@ class CommitCasSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.storage'='parquet', " +
       "'graft.delete-mode'='merge-on-read')")
     spark.sql("INSERT INTO graft.cas_mor VALUES (1, 10), (2, 20)")
-    val dir = MemTables.get("cas_mor").get.storageDir.get
+    val dir = MemTables.get("cas_mor").get.storageDir
     // DRIVER B publishes an EQUALITY DELETE through an independent state:
     // the interleaved kill could overlap rows driver A's UPDATE re-inserts
     // as post-images, so the replayed delta must REJECT (applyDelta's own
@@ -94,7 +94,7 @@ class CommitCasSpec extends SparkSpec {
     spark.sql("INSERT INTO graft.cas_src VALUES ('a', 1), ('b', 2)")
     spark.sql("CALL graft.create_materialized_view('casmv', " +
       "'SELECT g, sum(v) AS sv FROM graft.cas_src GROUP BY g')")
-    val storeDir = MemTables.get("casmv" + MatViews.StoreSuffix).get.storageDir.get
+    val storeDir = MemTables.get("casmv" + MatViews.StoreSuffix).get.storageDir
     // DRIVER B refreshes the MV: simulate by re-committing the journal at
     // the current generation (content unchanged — only the gen advances)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -130,7 +130,7 @@ class CommitCasSpec extends SparkSpec {
     assert(spark.table("graft.fresh_t").count() === 2L) // caches the state
     // DRIVER B kills k=2 through an INDEPENDENT state over the same
     // warehouse — driver A performs NO local write afterward
-    val dir = MemTables.get("fresh_t").get.storageDir.get
+    val dir = MemTables.get("fresh_t").get.storageDir
     val (_, foreign) = TableMetadata.load(dir).get
     foreign.synchronized {
       foreign.version += 1
@@ -207,7 +207,7 @@ class CommitCasSpec extends SparkSpec {
     spark.sql("CREATE TABLE graft.cas_lock (k BIGINT) " +
       "TBLPROPERTIES ('graft.storage'='parquet')")
     spark.sql("INSERT INTO graft.cas_lock VALUES (1)")
-    val dir = MemTables.get("cas_lock").get.storageDir.get
+    val dir = MemTables.get("cas_lock").get.storageDir
     val locks = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".lock"))
     assert(locks.isEmpty, s"lingering commit locks: ${locks.mkString(",")}")

@@ -289,9 +289,14 @@ class LimitPushdownSpec extends SparkSpec {
     // a mutation between stats and planning retires the sorted claim;
     // the memoized snapshot must keep both views identical regardless
     (100L until 200L).toDF("k").coalesce(1).writeTo("graft.lim_memo").append()
+    // a file partition emits positions [0, cut) minus dead ones; no cut
+    // (-1) means the whole batch
+    val batches = MemTables.get("lim_memo").get.batches
     val planned = scan.planInputPartitions().map { p =>
       val mp = p.asInstanceOf[MemPartition]
-      (mp.rows.length - mp.dead.size).toLong
+      val cut =
+        if (mp.cut >= 0) mp.cut else batches.find(_.batchId == mp.batchId).get.rowCount
+      (cut - mp.dead.size).toLong
     }.sum
     assert(planned === reported)
     spark.sql("DROP TABLE graft.lim_memo")

@@ -107,22 +107,13 @@ class MetadataPersistSpec extends SparkSpec {
     drop("mp_spec")
   }
 
-  test("unload of a driver-resident table is rejected; drop removes metadata") {
-    catalogOn(); drop("mp_mem")
-    spark.sql("CREATE TABLE graft.mp_mem (k BIGINT)")
-    spark.sql("INSERT INTO graft.mp_mem VALUES (1)")
-    val e = intercept[Exception](spark.sql("CALL graft.unload_table('mp_mem')"))
-    assert(e.getMessage.contains("driver-resident"), e.getMessage)
-    assert(spark.table("graft.mp_mem").count() === 1L)
-    drop("mp_mem")
-
-    // DROP of a file-backed table removes the directory — no zombie
-    // recovery of a dropped table
-    drop("mp_gone")
+  test("drop removes a table's metadata and directory") {
+    // DROP removes the directory — no zombie recovery of a dropped table
+    catalogOn(); drop("mp_gone")
     spark.sql("CREATE TABLE graft.mp_gone (k BIGINT) " +
       "TBLPROPERTIES ('graft.storage'='parquet')")
     spark.sql("INSERT INTO graft.mp_gone VALUES (1)")
-    val dir = MemTables.get("mp_gone").get.storageDir.get
+    val dir = MemTables.get("mp_gone").get.storageDir
     assert(new java.io.File(dir, "metadata.json").isFile,
       "every publish writes the metadata document")
     drop("mp_gone")
@@ -199,7 +190,7 @@ class MetadataPersistSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.storage'='parquet')")
     spark.sql("INSERT INTO graft.mp_maint SELECT id, concat('r', id) FROM range(0, 8)")
     spark.sql("INSERT INTO graft.mp_maint VALUES (100, 'x')")
-    val dir = MemTables.get("mp_maint").get.storageDir.get
+    val dir = MemTables.get("mp_maint").get.storageDir
 
     // procedures must NOT depend on a read having faulted the table in:
     // each runs against a cold registry (the restart-survival contract)
@@ -277,9 +268,13 @@ class MetadataPersistSpec extends SparkSpec {
       MemTables.commitEpochUpsert("mp_eqprune", "q-prune", id, st0.schema,
         Seq("k"), Seq(MemTables.RowsPayload(
           rows.map(r => InternalRow(r._1, r._2)).toArray)))
-    epoch(0L, 1L -> 10L, 2L -> 20L) // v1
-    epoch(1L, 2L -> 21L, 3L -> 30L) // v2: eq-delete on {2}
-    epoch(2L, 3L -> 31L) // v3: eq-delete on {3}
+    // sessionless epochs keep the read-time equality-delete record (with
+    // a session they convert to delete vectors at commit)
+    withoutSession {
+      epoch(0L, 1L -> 10L, 2L -> 20L) // v1
+      epoch(1L, 2L -> 21L, 3L -> 30L) // v2: eq-delete on {2}
+      epoch(2L, 3L -> 31L) // v3: eq-delete on {3}
+    }
     val st = MemTables.get("mp_eqprune").get
     assert(st.eqDeletes.size === 3, st.eqDeletes.toString)
     // compaction folds everything into one post-delete batch (version 4);

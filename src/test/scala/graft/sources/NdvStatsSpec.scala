@@ -67,10 +67,7 @@ class NdvStatsSpec extends SparkSpec {
     // the write task computed NDV into the manifest — no file load needed
     val live = MemTables.get("ndv_pq").get.batches
       .filter(_.removedAt == Long.MaxValue)
-    live.foreach { b =>
-      assert(b.store.file.isDefined)
-      assert(b.stats("k").ndv >= 1L && b.stats("k").ndv <= 5L)
-    }
+    live.foreach(b => assert(b.stats("k").ndv >= 1L && b.stats("k").ndv <= 5L))
     spark.conf.set("spark.sql.cbo.enabled", "true")
     try {
       val stats = spark.table("graft.ndv_pq").queryExecution.optimizedPlan.stats

@@ -71,10 +71,7 @@ class ParquetStorageSpec extends SparkSpec {
     // every batch is file-backed: the store is a manifest, the bytes are
     // a real parquet file on disk, and the stats came from the write task
     live.foreach { b =>
-      val f = b.store.file
-      assert(f.isDefined, "batch must be file-backed")
-      assert(new java.io.File(f.get).isFile, f.get)
-      assert(b.store.isInstanceOf[MemTables.FileStore])
+      assert(new java.io.File(b.store.path).isFile, b.store.path)
       assert(b.stats.nonEmpty)
     }
     // the read streams the files back exactly
@@ -94,7 +91,6 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("INSERT INTO graft.pq_part SELECT id, CAST(id % 4 AS INT) FROM range(0, 40)")
     val live = liveBatches("pq_part")
     assert(live.map(_.part).distinct.size === 4)
-    live.foreach(b => assert(b.store.file.isDefined))
     // partition-pure files: each file's rows recompute to its tuple
     val spec = MemTables.get("pq_part").get.partitioning
     live.foreach { b =>
@@ -120,12 +116,11 @@ class ParquetStorageSpec extends SparkSpec {
     assert(spark.table("graft.pq_mor").count() === 40L)
     // the files were NOT rewritten: same single file, DV overlay at read
     val live = liveBatches("pq_mor")
-    assert(live.forall(_.store.file.isDefined))
     assert(live.map(_.dv.size).sum === 10)
     assert(spark.sql("SELECT count(*) FROM graft.pq_mor VERSION AS OF 1")
       .head().getLong(0) === 50L)
-    // row-level UPDATE (delta path) composes: post-image rows may be
-    // driver-resident, pre-images stay in their files
+    // row-level UPDATE (delta path) composes: post-image rows land in a
+    // driver-written file, pre-images stay in their files
     spark.sql("UPDATE graft.pq_mor SET v = -1 WHERE k = 7")
     assert(spark.sql("SELECT v FROM graft.pq_mor WHERE k = 7").head().getLong(0) === -1L)
     assert(spark.table("graft.pq_mor").count() === 40L)
@@ -162,8 +157,6 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("CALL graft.rewrite_data_files('pq_rw', 'k')")
     val after = liveBatches("pq_rw")
     assert(after.map(_.batchId).toSet.intersect(before).isEmpty)
-    after.foreach(b => assert(b.store.file.isDefined,
-      "rewrite output must be file-backed (manifest publish)"))
     // the sorted claim serves TOP-N trimming over files
     val head = spark.sql("SELECT k FROM graft.pq_rw ORDER BY k LIMIT 3")
     assert(head.collect().map(_.getLong(0)).toSeq === Seq(0L, 1L, 2L))
@@ -179,13 +172,12 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("INSERT INTO graft.pq_uniform SELECT id, id FROM range(0, 30)")
     spark.sql("DELETE FROM graft.pq_uniform WHERE k % 3 = 0") // CoW survivors
     liveBatches("pq_uniform").foreach(b =>
-      assert(b.store.file.isDefined, "CoW survivor must be file-backed"))
+      assert(new java.io.File(b.store.path).isFile, "CoW survivor file"))
     assert(spark.table("graft.pq_uniform").count() === 20L)
     spark.sql("INSERT INTO graft.pq_uniform VALUES (100, 100)")
     spark.sql("CALL graft.compact_table('pq_uniform')")
-    val folded = liveBatches("pq_uniform")
-    folded.foreach(b =>
-      assert(b.store.file.isDefined, "compaction output must be file-backed"))
+    liveBatches("pq_uniform").foreach(b =>
+      assert(new java.io.File(b.store.path).isFile, "compaction output file"))
     assert(spark.table("graft.pq_uniform").count() === 21L)
     drop("pq_uniform")
   }
@@ -207,7 +199,6 @@ class ParquetStorageSpec extends SparkSpec {
     assert(r.getLong(1) === 900L) // 1000 − 100 deleted
     assert(spark.table("graft.pq_distcomp").count() === 900L)
     val folded = liveBatches("pq_distcomp")
-    assert(folded.forall(_.store.file.isDefined))
     assert(folded.forall(_.dv.isEmpty), "DVs are applied, not carried")
     // single-live-batch fast path stays a no-op
     assert(spark.sql("CALL graft.compact_table('pq_distcomp')")
@@ -228,10 +219,9 @@ class ParquetStorageSpec extends SparkSpec {
     val live = liveBatches("pq_manytuple")
     assert(live.map(_.part.head).distinct.size === 7)
     live.foreach { b =>
-      assert(b.store.file.isDefined)
       // partition purity: every file holds one g value
       val g = b.part.head.asInstanceOf[Int]
-      val rows = ParquetRows.read(b.store.file.get, b.schema)
+      val rows = ParquetRows.read(b.store.path, b.schema)
       assert(rows.forall(_.getInt(0) == g))
       // incremental stats match the rows: bounds, nulls, exact NDV
       val ks = rows.map(_.getLong(1))
@@ -310,44 +300,41 @@ class ParquetStorageSpec extends SparkSpec {
     drop("pq_zorder", "pq_zpart")
   }
 
-  test("migrate_storage promotes a driver-resident table in place") {
+  test("a propertyless CREATE is file-backed and records graft.storage") {
+    catalogOn(); drop("pq_default")
+    spark.sql("CREATE TABLE graft.pq_default (k BIGINT)")
+    spark.sql("INSERT INTO graft.pq_default VALUES (1)")
+    val props = spark.sql("SHOW TBLPROPERTIES graft.pq_default").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(props.get("graft.storage").contains("parquet"), props.toString)
+    val dir = MemTables.get("pq_default").get.storageDir
+    assert(new java.io.File(dir, "metadata.json").isFile)
+    // any other storage format is rejected at CREATE
+    val e = intercept[Exception](spark.sql(
+      "CREATE TABLE graft.pq_orc (k BIGINT) TBLPROPERTIES ('graft.storage'='orc')"))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("must be 'parquet'")), msgs.toString)
+    assert(MemTables.get("pq_orc").isEmpty)
+    drop("pq_default")
+  }
+
+  test("migrate_storage is an idempotent no-op on a file-backed table") {
     catalogOn(); drop("pq_migrate")
-    spark.sql("CREATE TABLE graft.pq_migrate (k BIGINT, v STRING) " +
-      "TBLPROPERTIES ('graft.delete-mode'='merge-on-read')")
+    spark.sql("CREATE TABLE graft.pq_migrate (k BIGINT, v STRING)")
     spark.sql("INSERT INTO graft.pq_migrate " +
       "SELECT id, concat('v', id) FROM range(0, 50)") // v1
-    spark.sql("DELETE FROM graft.pq_migrate WHERE k < 5") // v2: DVs
-    spark.sql("INSERT OVERWRITE graft.pq_migrate " +
-      "SELECT id, concat('w', id) FROM range(0, 20)") // v3: history batch
-    val want = spark.sql("SELECT k, v FROM graft.pq_migrate ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val wantV2 = spark.sql("SELECT count(*) FROM graft.pq_migrate VERSION AS OF 2")
-      .head().getLong(0)
-    val versionBefore = MemTables.get("pq_migrate").get.version
-
+    val st = MemTables.get("pq_migrate").get
+    val versionBefore = st.version
     val r = spark.sql(
       "CALL graft.migrate_storage('pq_migrate', 'parquet')").collect()(0)
-    assert(r.getLong(0) >= 3L, "current + history batches all migrate")
-    val st = MemTables.get("pq_migrate").get
-    assert(st.storageDir.isDefined)
+    assert(r.getLong(0) === 0L && r.getString(1) === st.storageDir)
     assert(st.version === versionBefore, "migration mints no version")
-    assert(st.batches.forall(_.store.file.isDefined),
-      "every batch (history included) is file-backed after migration")
-    assert(spark.sql("SELECT k, v FROM graft.pq_migrate ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq === want)
-    assert(spark.sql("SELECT count(*) FROM graft.pq_migrate VERSION AS OF 2")
-      .head().getLong(0) === wantV2)
-
-    // the migrated table ACQUIRED durability: unload + recover round-trips
-    spark.sql("CALL graft.unload_table('pq_migrate')")
-    assert(spark.sql("SELECT k, v FROM graft.pq_migrate ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq === want)
-    // future writes land as files
-    spark.sql("INSERT INTO graft.pq_migrate VALUES (999, 'new')")
-    assert(liveBatches("pq_migrate").forall(_.store.file.isDefined))
-    // idempotent: second call is a no-op
     assert(spark.sql("CALL graft.migrate_storage('pq_migrate', 'parquet')")
       .collect()(0).getLong(0) === 0L)
+    intercept[Exception](
+      spark.sql("CALL graft.migrate_storage('pq_migrate', 'orc')").collect())
+    assert(spark.table("graft.pq_migrate").count() === 50L)
     drop("pq_migrate")
   }
 
@@ -356,7 +343,7 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("CREATE TABLE graft.pq_branch (k BIGINT, v BIGINT) TBLPROPERTIES (" +
       "'graft.storage'='parquet', 'graft.delete-mode'='merge-on-read')")
     spark.sql("INSERT INTO graft.pq_branch VALUES (1, 10)") // v1
-    val dir = MemTables.get("pq_branch").get.storageDir.get
+    val dir = MemTables.get("pq_branch").get.storageDir
     def files() = Option(new java.io.File(dir).list())
       .map(_.count(_.endsWith(".parquet"))).getOrElse(0)
     val mainFiles = files()
@@ -370,7 +357,7 @@ class ParquetStorageSpec extends SparkSpec {
     // abort reclaim: a committed-but-never-published task message's files
     // are deleted by the driver's abort call
     val pw = MemParquetWrite(dir, MemTables.get("pq_branch").get.schema, Nil, 0)
-    val w = new MemWriterFactory(Some(pw)).createWriter(0, 99L)
+    val w = new MemWriterFactory(pw).createWriter(0, 99L)
     w.write(org.apache.spark.sql.catalyst.InternalRow(7L, 70L))
     val msg = w.commit()
     assert(files() === mainFiles + 1)
@@ -389,11 +376,10 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("CALL graft.rollback_table('pq_rb', 1)") // v3: restore
     // the whole-batch restore SHARES the original's file by reference
     val live = liveBatches("pq_rb")
-    assert(live.forall(_.store.file.isDefined))
-    val liveFiles = live.flatMap(_.store.file).toSet
+    val liveFiles = live.map(_.store.path).toSet
     val removed = MemTables.get("pq_rb").get.batches
       .filter(_.removedAt != Long.MaxValue)
-    assert(removed.flatMap(_.store.file).toSet.subsetOf(liveFiles),
+    assert(removed.map(_.store.path).toSet.subsetOf(liveFiles),
       "restore must share the original's file")
     // expiry drops the originals but must NOT delete the shared file
     spark.sql("CALL graft.expire_snapshots('pq_rb', 3)")
@@ -409,7 +395,7 @@ class ParquetStorageSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.storage'='parquet')")
     spark.sql("INSERT INTO graft.pq_orphan SELECT id FROM range(0, 10)")
     spark.sql("INSERT OVERWRITE graft.pq_orphan SELECT id FROM range(0, 5)")
-    val dir = MemTables.get("pq_orphan").get.storageDir.get
+    val dir = MemTables.get("pq_orphan").get.storageDir
     // plant two orphans: a crashed task's file (never published)
     val schema = MemTables.get("pq_orphan").get.schema
     for (i <- 1 to 2)
@@ -433,11 +419,6 @@ class ParquetStorageSpec extends SparkSpec {
     // a second sweep finds nothing
     assert(spark.sql("CALL graft.remove_orphan_files('pq_orphan', 0)")
       .collect()(0).getLong(0) === 0L)
-    // driver-resident tables are a no-op
-    drop("pq_orphan")
-    spark.sql("CREATE TABLE graft.pq_orphan (k BIGINT)")
-    assert(spark.sql("CALL graft.remove_orphan_files('pq_orphan', 0)")
-      .collect()(0).getLong(0) === 0L)
     drop("pq_orphan")
   }
 
@@ -445,7 +426,7 @@ class ParquetStorageSpec extends SparkSpec {
     catalogOn(); drop("pq_life")
     spark.sql("CREATE TABLE graft.pq_life (k BIGINT) " +
       "TBLPROPERTIES ('graft.storage'='parquet')")
-    val dir = MemTables.get("pq_life").get.storageDir.get
+    val dir = MemTables.get("pq_life").get.storageDir
     spark.sql("INSERT INTO graft.pq_life SELECT id FROM range(0, 10)") // v1
     spark.sql("INSERT OVERWRITE graft.pq_life SELECT id FROM range(0, 5)") // v2 truncate
     def files() = Option(new java.io.File(dir).list()).map(_.count(_.endsWith(".parquet"))).getOrElse(0)

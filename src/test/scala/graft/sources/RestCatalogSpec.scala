@@ -55,7 +55,7 @@ class RestCatalogSpec extends SparkSpec {
       spark.sql("CREATE TABLE graft.rest_cas (k BIGINT) " +
         "TBLPROPERTIES ('graft.storage'='parquet')")
       spark.sql("INSERT INTO graft.rest_cas VALUES (1)")
-      val dir = MemTables.get("rest_cas").get.storageDir.get
+      val dir = MemTables.get("rest_cas").get.storageDir
       // DRIVER B: an independent state over the same service — its load
       // and its commit both ride HTTP; the CAS at its loaded generation
       // wins at the service end
@@ -107,7 +107,7 @@ class RestCatalogSpec extends SparkSpec {
         "'graft.delete-mode'='merge-on-read')")
       spark.sql("INSERT INTO graft.rest_fresh VALUES (1, 10), (2, 20)")
       assert(spark.table("graft.rest_fresh").count() === 2L) // cache it
-      val dir = MemTables.get("rest_fresh").get.storageDir.get
+      val dir = MemTables.get("rest_fresh").get.storageDir
       val (_, foreign) = TableMetadata.load(dir).get
       foreign.synchronized {
         foreign.version += 1

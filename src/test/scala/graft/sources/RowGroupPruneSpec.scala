@@ -83,7 +83,7 @@ class RowGroupPruneSpec extends SparkSpec {
     val target = new StructType().add("k", LongType).add("v", LongType)
       .add(MemTables.BatchPos, org.apache.spark.sql.types.IntegerType)
     val part = MemPartition(schema, 1L, Map("k" -> "k", "v" -> "v"),
-      Array.empty, Set.empty, 7L, None, file = Some(path),
+      path, Set.empty, 7L, None,
       pushFilters = Array(GreaterThanOrEqual("k", (N - 50).toLong)))
     val reader = MemScan.readerFactoryFor(target).createReader(part)
     var n = 0

@@ -54,7 +54,7 @@ class UpsertConversionSpec extends SparkSpec {
     assert(st.eqDeletes.isEmpty,
       "the epoch's equality delete must convert to DVs — no probe record persists")
     val v1Batches = st.batches.filter(b => b.version == 1L)
-    assert(v1Batches.nonEmpty && v1Batches.forall(_.store.file.isDefined))
+    assert(v1Batches.nonEmpty)
     val killed = v1Batches.flatMap(_.dv.toSeq)
     assert(killed.nonEmpty && killed.forall(_._2 == 2L),
       s"doomed positions carry the epoch's version, got ${killed.take(5)}")
@@ -118,16 +118,34 @@ class UpsertConversionSpec extends SparkSpec {
       .head().getLong(0) === (0L until 40L).map(_ * 10).sum)
   }
 
-  test("driver-resident upsert tables keep the read-time equality delete") {
+  test("sessionless upsert epochs keep the read-time equality delete") {
     catalogOn()
-    spark.sql("DROP TABLE IF EXISTS graft.upconv_mem")
-    spark.sql("CREATE TABLE graft.upconv_mem (k BIGINT, v BIGINT) TBLPROPERTIES (" +
+    spark.sql("DROP TABLE IF EXISTS graft.upconv_nos")
+    spark.sql("CREATE TABLE graft.upconv_nos (k BIGINT, v BIGINT) TBLPROPERTIES (" +
       "'graft.delete-mode'='merge-on-read', 'graft.upsert-keys'='k')")
-    runEpochs("graft.upconv_mem")
-    val st = MemTables.get("upconv_mem").get
-    assert(st.storageDir.isEmpty)
-    assert(st.eqDeletes.nonEmpty, "no file plane, no conversion job — the " +
+    val schema = MemTables.get("upconv_nos").get.schema
+    def epoch(id: Long, rows: Seq[(Long, Long)]): Unit =
+      MemTables.commitEpochUpsert("upconv_nos", "q-nos", id, schema, Seq("k"),
+        Seq(MemTables.RowsPayload(rows.map { case (k, v) =>
+          org.apache.spark.sql.catalyst.InternalRow(k, v) }.toArray)))
+    // the same two epochs runEpochs streams, committed with no session to
+    // host a conversion job
+    withoutSession {
+      epoch(0L, (0L until 40L).map(k => (k, k * 10))) // v1
+      epoch(1L, (0L until 40L).filter(_ % 3 == 0).map(k => (k, k * 10 + 7))) // v2
+    }
+    val st = MemTables.get("upconv_nos").get
+    assert(st.eqDeletes.nonEmpty, "no session, no conversion job — the " +
       "read-time record remains")
-    assert(spark.sql("SELECT count(*) FROM graft.upconv_mem").head().getLong(0) === 40L)
+    assert(st.batches.forall(_.dv.isEmpty))
+    // same reads as the converted path
+    assert(spark.sql("SELECT count(*) FROM graft.upconv_nos").head().getLong(0) === 40L)
+    assert(spark.sql(
+      "SELECT CAST(sum(v) AS BIGINT) FROM graft.upconv_nos WHERE k % 3 = 0")
+      .head().getLong(0) ===
+      (0L until 40L).filter(_ % 3 == 0).map(_ * 10 + 7).sum)
+    assert(spark.sql(
+      "SELECT CAST(sum(v) AS BIGINT) FROM graft.upconv_nos VERSION AS OF 1")
+      .head().getLong(0) === (0L until 40L).map(_ * 10).sum)
   }
 }
