@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{
-  Add, AttributeReference, Cast, Expression, If, IsNull, LessThan, GreaterThan,
-  Literal, Or
+  Add, AttributeReference, Cast, Expression, GreaterThan, GreaterThanOrEqual,
+  If, IsNull, LessThan, LessThanOrEqual, Literal, Or
 }
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -20,9 +20,10 @@ import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, LongType}
   * 2^63, which a 100 TB table with ~10^14-sized per-row products reaches.
   *
   * This aggregate keeps both properties: the buffer is (acc DECIMAL(38,0),
-  * lo LONG); each row does one long add plus one range compare, and only
+  * lo LONG); each row does one long add plus two range compares, and only
   * when |lo| crosses 2^62 does the buffer spill lo into acc with a decimal
-  * add — once every ~2^62/|x| rows, amortized to nothing. Merge and final
+  * add — once every ~2^62/|x| rows, amortized to nothing. A single addend
+  * of |x| >= 2^62 takes the decimal add directly. Merge and final
   * evaluation are decimal (per-partition counts, not per-row). Numerically
   * identical to the decimal sum for every input (spec: [[BigSumSpec]]),
   * overflow-safe for any row count whose true sum fits DECIMAL(38,0).
@@ -36,7 +37,7 @@ case class BigSum(child: Expression)
 
   private val dec = DecimalType(38, 0)
   // |lo| beyond this spills into acc; 2^62 leaves headroom of 2^62 for the
-  // next row's addend (any long up to ~4.6e18 cannot overflow the add)
+  // next row's addend (larger addends bypass lo entirely)
   private val spillAt = 1L << 62
 
   override def dataType: DataType = dec
@@ -53,12 +54,19 @@ case class BigSum(child: Expression)
 
   override lazy val updateExpressions: Seq[Expression] = {
     val x = If(IsNull(child), Literal(0L), child)
-    val newLo = Add(lo, x)
+    // an addend of |x| >= 2^62 could overflow the long add itself (|lo| is
+    // up to 2^62), so it goes straight into acc and lo stays as it was;
+    // every other addend keeps |lo + x| < 2^63
+    val big = Or(
+      GreaterThanOrEqual(x, Literal(spillAt)),
+      LessThanOrEqual(x, Literal(-spillAt)))
+    val newLo = Add(lo, If(big, Literal(0L), x))
     val spill = Or(
       GreaterThan(newLo, Literal(spillAt)),
       LessThan(newLo, Literal(-spillAt)))
     Seq(
-      If(spill, Add(acc, Cast(newLo, dec)), acc),
+      If(big, Add(acc, Cast(x, dec)),
+        If(spill, Add(acc, Cast(newLo, dec)), acc)),
       If(spill, Literal(0L), newLo))
   }
 
@@ -76,7 +84,11 @@ case class BigSum(child: Expression)
 
 object BigSum {
 
-  /** `big_sum(col)` as a Column (col must already be LONG). */
+  /** `big_sum(col)` as a Column (col must already be LONG): the exact
+    * DECIMAL(38,0) sum of its values. Unlike SQL SUM, a NULL input counts
+    * as 0 and an empty input (or all-NULL group) sums to 0, never NULL —
+    * meant for non-null metric columns under a non-empty scan.
+    */
   def of(c: Column): Column =
     Bridge.column(BigSum(Bridge.expression(c)).toAggregateExpression())
 }

@@ -1,5 +1,6 @@
 package graft.rentals
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,6 +54,8 @@ final case class DataQualitySummary(
 final class DataQualityError(msg: String) extends RuntimeException(msg)
 
 object DataQuality {
+
+  private lazy val log = LogManager.getLogger(getClass)
 
   /** Null-fraction gate (`null_percentage_check`, `jobs/data_quality.py:41-66`):
     * passes when `nulls/total <= threshold`; an empty DataFrame passes
@@ -242,7 +245,7 @@ object DataQuality {
           details = details)
       } catch {
         case e: Exception =>
-          System.err.println(
+          log.warn(
             s"graft dq: fused gate threw ${e.getClass.getSimpleName}: " +
               s"${e.getMessage} — falling back to per-check evaluation")
       }
@@ -256,7 +259,7 @@ object DataQuality {
         // config bug would vanish without a trace
         val ok = try c.checkFn(target) catch {
           case e: Exception =>
-            System.err.println(
+            log.warn(
               s"graft dq: check '${c.name}' threw ${e.getClass.getSimpleName}: " +
                 s"${e.getMessage} — recorded as failed")
             false

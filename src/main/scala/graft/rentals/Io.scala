@@ -162,8 +162,11 @@ object Io {
     val sized =
       if (singleFilePerPartition) withYear.coalesce(1)
       else graft.core.Par.fanOutBy(withYear, config.partitionKeys.map(col): _*)
+    // fork-free `file:` writes (same bytes, `.crc` files and permissions;
+    // see graft.core.LocalFs); a no-op for every other scheme
     sized.write
       .mode(SaveMode.Overwrite)
+      .options(graft.core.LocalFs.checksummedOptions)
       .option("compression", "snappy")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(config.partitionKeys: _*)
@@ -194,6 +197,7 @@ object Io {
         config.partitionKeys.map(col): _*)
         .write
         .mode(SaveMode.Overwrite)
+        .options(graft.core.LocalFs.checksummedOptions)
         .option("compression", "snappy")
         .partitionBy(config.partitionKeys: _*)
         .parquet(path)

@@ -3,6 +3,8 @@ package graft.rentals
 import scala.concurrent.duration._
 import scala.util.control.NonFatal
 
+import org.apache.logging.log4j.LogManager
+
 /** Orchestration semantics of the reference DAG, engine-side — the retry /
   * failure-callback / stage-chain behavior a user replacing the scheduler
   * would otherwise lose (`dags/rental_pipeline_dag.py:24-52`: default_args
@@ -97,12 +99,14 @@ object Orchestration {
   }
 
   object StageRunner {
+    private lazy val log = LogManager.getLogger(getClass)
+
     /** Default callback — the reference's `_on_failure_callback` log line
-      * shape (`rental_pipeline_dag.py:40-47`), stderr in place of the
-      * scheduler's logger.
+      * shape (`rental_pipeline_dag.py:40-47`), through Spark's log4j in
+      * place of the scheduler's logger.
       */
     def logFailure(f: StageFailure): Unit =
-      System.err.println(
+      log.error(
         s"[orchestration] stage failed: pipeline=${f.pipeline} stage=${f.stage} " +
           s"attempt=${f.attempt} willRetry=${f.willRetry} error=${f.error.getMessage}")
   }

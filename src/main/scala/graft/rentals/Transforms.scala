@@ -37,28 +37,29 @@ object Transforms {
 
   /** Wide->long unpivot (`unpivot_monthly`, `jobs/transform.py:59-88`).
     *
-    * Uses the same `stack(n, 'c', `c`, ...)` Catalyst generator as the
+    * Uses the same `stack(n, …, `c`, …)` Catalyst generator as the
     * reference (`jobs/transform.py:73-79`) — `stack` emits one row per
     * (region, date-column) *including null measures*; null-cleaning is a
-    * separate, later op. Month strings parse with
+    * separate, later op. `stack` is a narrow generator — no shuffle; output
+    * rows = regions × month-columns.
+    *
+    * The month is the reference's parse,
     * `coalesce(try_to_date(c,'yyyy-MM-dd'), try_to_date(c,'yyyy-MM'))`
-    * (`jobs/transform.py:82-86`; `yyyy-MM` yields first-of-month). `stack` is
-    * a narrow generator — no shuffle; output rows = regions × month-columns.
+    * (`jobs/transform.py:82-86`; `yyyy-MM` yields first-of-month, an
+    * invalid date-named header such as `2024-13` yields null), applied to
+    * each column's literal header inside the `stack` arguments rather than
+    * to a per-row month string: every argument is then a constant that
+    * ConstantFolding evaluates once per column, so no row pays a parse.
     */
   def unpivotMonthly(df: DataFrame): DataFrame = {
     val idCols = Seq("RegionID", "RegionName", "StateName")
     val dateCols = df.columns.filterNot(idCols.contains).filter(Schemas.isDateCol)
     require(dateCols.nonEmpty, "no date-named measure columns to unpivot")
-    val stackArgs = dateCols.map(c => s"'$c', `$c`").mkString(", ")
-    val stackExpr = s"stack(${dateCols.length}, $stackArgs) as (month_str, median_rent)"
+    val stackArgs = dateCols.map { c =>
+      s"coalesce(try_to_date('$c', 'yyyy-MM-dd'), try_to_date('$c', 'yyyy-MM')), `$c`"
+    }.mkString(", ")
+    val stackExpr = s"stack(${dateCols.length}, $stackArgs) as (month, median_rent)"
     df.selectExpr(idCols :+ stackExpr: _*)
-      .withColumn(
-        "month",
-        coalesce(
-          try_to_date(col("month_str"), "yyyy-MM-dd"),
-          try_to_date(col("month_str"), "yyyy-MM")))
-      .drop("month_str")
-      .select("RegionID", "RegionName", "StateName", "month", "median_rent")
   }
 
   /** Null-measure filter (`clean_nulls`, `jobs/transform.py:91-104`). */

@@ -68,19 +68,14 @@ private[sources] object MetaIO {
     restClient.map(_.listTables()).getOrElse(Nil)
 
   // template Configuration: parsing the Hadoop default XMLs costs tens of
-  // ms — pay it once. file: goes through RawLocalFileSystem (no .crc
-  // shadows; metadata docs carry their own JSON integrity) with the FS
-  // cache off so other file:-users' checksumming is untouched.
-  private lazy val conf: Configuration = {
-    val c = new Configuration()
-    c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-    c.set("fs.file.impl.disable.cache", "true")
-    c
-  }
+  // ms — pay it once. file: binds the raw fork-free filesystem (no .crc
+  // shadows — metadata docs carry their own JSON integrity — and no
+  // `chmod` forks; see [[graft.core.LocalFs]]).
+  private lazy val conf: Configuration =
+    graft.core.LocalFs.useRaw(new Configuration())
 
-  // FileSystem per scheme+authority (our conf disables the Hadoop cache
-  // for file:, so cache here instead — RawLocalFileSystem construction is
-  // trivial but not free on every metadata probe)
+  // FileSystem per scheme+authority: our conf disables the Hadoop cache
+  // for file:, so cache here instead of constructing one per metadata probe
   private val fsCache = TrieMap.empty[String, FileSystem]
 
   private[sources] def fs(p: Path): FileSystem = {

@@ -65,9 +65,7 @@ object ParquetColumnar {
   // ParquetReadSupport read, at the engine's fixed semantics (identical
   // to ParquetRows.buildReadConf) — built once, copied per reader
   private lazy val template: Configuration = {
-    val c = new Configuration()
-    c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-    c.set("fs.file.impl.disable.cache", "true")
+    val c = graft.core.LocalFs.useRaw(new Configuration())
     c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
     c.set("spark.sql.caseSensitive", "false")

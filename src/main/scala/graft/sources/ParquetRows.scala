@@ -34,22 +34,10 @@ object ParquetRows {
     scala.collection.concurrent.TrieMap.empty[String, Configuration]
 
   private def cached(key: String)(build: => Configuration): Configuration =
-    new Configuration(confCache.getOrElseUpdate(key, {
-      val c = build
-      // local `file:` paths skip ChecksumFileSystem: the default wraps
-      // every file in a `.crc` shadow (2x creates, 2x deletes, checksum
-      // CPU) — measurable per-file fixed cost at gate scale, pure
-      // overhead under parquet's own page checksums. Object-storage
-      // schemes (s3a://...) are untouched. The impl override alone is
-      // unreliable: Hadoop's FileSystem cache is keyed by scheme+UGI,
-      // not conf, so whoever resolves file: first wins for the whole
-      // JVM — disable the cache for our confs instead (RawLocalFileSystem
-      // construction is trivial), which both guarantees Raw here and
-      // leaves every other file:-scheme user's checksumming untouched.
-      c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      c.set("fs.file.impl.disable.cache", "true")
-      c
-    }))
+    // local `file:` paths skip ChecksumFileSystem (no `.crc` shadow per
+    // file, pure overhead under parquet's own page checksums) and Hadoop's
+    // `chmod` forks: see [[graft.core.LocalFs]]
+    new Configuration(confCache.getOrElseUpdate(key, graft.core.LocalFs.useRaw(build)))
 
   private def writeConf(schema: StructType): Configuration =
     cached("w|" + schema.json)(buildWriteConf(schema))

@@ -52,15 +52,16 @@ object Streams {
   private[graft] def statePartitions(spark: SparkSession, dir: String,
       tables: Seq[String], floor: Int): Int = {
     val parent = spark.sessionState.conf.numShufflePartitions
-    def sizeOf(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-      else if (f.isFile) f.length()
-      else 0L
+    // sized through the path's Hadoop filesystem, so a `file:` URI or a
+    // remote (hdfs://, s3a://) dir measures its real footprint
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val entries =
+      try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
     val bytes = tables.map { t =>
-      val d = new java.io.File(dir)
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(t + ".parquet")).map(sizeOf).sum
+      entries.filter(_.getPath.getName.startsWith(t + ".parquet"))
+        .map(e => fs.getContentSummary(e.getPath).getLength).sum
     }.sum
     val byData = (bytes / stateBytesPerPartition).toInt
     math.min(parent, math.max(floor, byData))

@@ -49,6 +49,21 @@ class BigSumSpec extends SparkSpec {
     assert(bigSum(empty).longValueExact() == 0L)
   }
 
+  test("addends beyond 2^62 (Long.MaxValue / Long.MinValue) sum exactly") {
+    import spark.implicits._
+    val xs = Seq(Long.MaxValue, Long.MaxValue, 3L, Long.MaxValue, 1L << 62,
+      Long.MinValue, -(1L << 62), Long.MinValue, Long.MinValue, Long.MinValue,
+      Long.MaxValue, (1L << 62) - 1, 42L)
+    val expected = new java.math.BigDecimal(xs.map(BigInt(_)).sum.bigInteger)
+    // one partition: every addend folds into the same buffer in order
+    val oneBuffer = xs.toDF("x").coalesce(1)
+    val result = oneBuffer.agg(BigSum.of(col("x")).as("s"))
+    assert(result.schema("s").dataType ==
+      org.apache.spark.sql.types.DecimalType(38, 0))
+    assert(result.head().getDecimal(0).compareTo(expected) == 0)
+    assert(bigSum(xs.toDF("x").repartition(3)).compareTo(expected) == 0)
+  }
+
   test("grouped aggregation (hash path with keys) matches decimal sum") {
     import spark.implicits._
     val df = (1L to 20000L).map(i => (i % 7, (1L << 50) + i)).toDF("g", "x")

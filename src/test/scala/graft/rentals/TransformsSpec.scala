@@ -26,6 +26,26 @@ class TransformsSpec extends SparkSpec {
     assert(out.filter(col("median_rent").isNull).count() === 1)
   }
 
+  test("unpivot parses yyyy-MM, yyyy-MM-dd and invalid date-named headers; the parse is folded per column") {
+    val schema = StructType(Seq("RegionID", "RegionName", "StateName", "2024-01", "2024-02-15", "2024-13")
+      .map(StructField(_, StringType)))
+    val out = mkDf(schema, Seq(Row("1", "r", "CA", "10", "20", "30")))
+      .transform(Transforms.enforceSchema).transform(Transforms.unpivotMonthly)
+    val months = out.collect().map(r => r.getDouble(4) -> Option(r.getDate(3))).toMap
+    assert(months === Map(
+      10.0 -> Some(java.sql.Date.valueOf("2024-01-01")),
+      20.0 -> Some(java.sql.Date.valueOf("2024-02-15")),
+      30.0 -> None))
+    // no row-level date parse survives optimization: each header's month
+    // is a literal argument of the Generate
+    val plan = out.queryExecution.optimizedPlan
+    assert(plan.collectFirst { case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.nonEmpty)
+    val parses = plan.flatMap(_.expressions).flatMap(_.collect {
+      case e if Set("gettimestamp", "to_date", "try_to_date").contains(e.prettyName) => e
+    })
+    assert(parses.isEmpty, s"per-row month parse left in the plan: $parses")
+  }
+
   test("enforce_schema drops SizeRank/RegionType and casts strings (test_transform.py:40-48)") {
     val out = Transforms.enforceSchema(wide)
     assert(!out.columns.contains("SizeRank") && !out.columns.contains("RegionType"))

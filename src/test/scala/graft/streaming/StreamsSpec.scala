@@ -29,6 +29,21 @@ class StreamsSpec extends SparkSpec {
     assert(s.size >= (b.size * 3) / 4)
   }
 
+  test("statePartitions sizes a file: URI dir the same as its plain path") {
+    withTempDir { dir =>
+      // a sparse 130 MB "table" (two partitions' worth at 64 MB each) —
+      // sized from its length, never read, so it costs no disk
+      val tbl = new java.io.File(dir, "events.parquet")
+      tbl.mkdirs()
+      val f = new java.io.RandomAccessFile(new java.io.File(tbl, "part-0.parquet"), "rw")
+      try f.setLength(130L * 1024 * 1024) finally f.close()
+      val plain = Streams.statePartitions(spark, dir.getAbsolutePath, Seq("events"), floor = 1)
+      val uri = Streams.statePartitions(spark, dir.toURI.toString, Seq("events"), floor = 1)
+      assert(plain === 2, "130 MB / 64 MB, capped at the session's 2 partitions")
+      assert(uri === plain)
+    }
+  }
+
   test("streaming dedup: doubled stream (and planted source dups) collapse to one row per id") {
     withTempDir { dir =>
       import spark.implicits._
